@@ -402,18 +402,6 @@ object MultimodalOps {
       .select(col("ra"), col("rb"), col("hamming"))
   }
 
-  /** Staged aHash dup-class table (b0..b3, rep, members, csize): the
-    * decode→hash→class collapse that q122's pair expansion AND q201's
-    * (image → class_rep, class_size) serving table — the multimodal 100 TB
-    * output contract (judge r15 #1) — both read. One whole-corpus PNG
-    * decode per (session, dir), stage-timed as ahash_blocks_build exactly
-    * as before (the bench trend line keeps its meaning); the class table
-    * is a plain localCheckpoint (cross-query staged — it must survive the
-    * driver's between-queries releaseScoped sweep) freed via TextOps's
-    * release lifecycle alongside the other staged tables. Lock order
-    * follows the documented one-way rule: owner lock → TextOps lock on
-    * build (timedBuild), and the release hook runs outside TextOps's
-    * lock. */
   /** Oracle CTE prefix ending in `blocks` = per-image 4×16-bit aHash
     * blocks replayed arithmetically (the pixel law — PNG gray is
     * lossless), shared by q122's pair oracle and q201's class oracle. */
@@ -448,37 +436,26 @@ object MultimodalOps {
                  CAST(sum(CASE WHEN k // 16 = 3 THEN bit << (k % 16) ELSE 0 END) AS BIGINT) AS b3
           FROM bits GROUP BY media_id)"""
 
-  private var ahashClassesCache: Option[(SparkSession, String, DataFrame)] =
-    None
-  graft.queries.TextOps.onRelease(() => releaseAhashClasses())
-  private[graft] def releaseAhashClasses(): Unit = synchronized {
-    ahashClassesCache.foreach(p => graft.Checkpoints.release(p._3))
-    ahashClassesCache = None
-  }
-
+  /** Staged aHash dup-class table (b0..b3, rep, members, csize): the
+    * decode→hash→class collapse that q122's pair expansion AND q201's
+    * (image → class_rep, class_size) serving table — the multimodal 100 TB
+    * output contract (judge r15 #1) — both read. One whole-corpus PNG
+    * decode per staged slot, stage-timed as ahash_blocks_build (the bench
+    * trend line keeps its meaning); the class table is a plain
+    * localCheckpoint, so the driver's between-queries releaseScoped sweep
+    * cannot free it. */
   private def ahashClassesCached(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      ahashClassesCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => graft.queries.TextOps.timedBuild("ahash_blocks_build") {
-          prev.foreach(p => graft.Checkpoints.release(p._3))
-          // slot cleared BEFORE the build: a failed build must leave None
-          // (next consumer rebuilds), never a stale entry pointing at the
-          // just-released frame
-          ahashClassesCache = None
-          val blocks = graft.Checkpoints.localCheckpoint(
-            aHashBlocks(mediaTable(s, d)))
-          val classes = blocks
-            .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
-            .agg(min(col("media_id")).as("rep"),
-              collect_list(col("media_id")).as("members"),
-              count(lit(1)).as("csize"))
-            .localCheckpoint() // eager — blocks is consumed here and only here
-          graft.Checkpoints.release(blocks)
-          ahashClassesCache = Some((s, d, classes))
-          classes
-        }
-      }
+    graft.Staged.checkpointed("ahash_blocks_build", s, d) {
+      val blocks = graft.Checkpoints.localCheckpoint(
+        aHashBlocks(mediaTable(s, d)))
+      val classes = blocks
+        .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
+        .agg(min(col("media_id")).as("rep"),
+          collect_list(col("media_id")).as("members"),
+          count(lit(1)).as("csize"))
+        .localCheckpoint() // eager — blocks is consumed here and only here
+      graft.Checkpoints.release(blocks)
+      classes
     }
 
   val qs: Map[String, Q] = Map(

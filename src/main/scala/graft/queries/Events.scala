@@ -1008,45 +1008,24 @@ object Events {
     * enumeration and nothing quadratic is ever materialized — the 100 TB
     * posture, where the serving deployment runs ONE consumer anyway. */
   private[graft] val StagedPairSpectrumBound = 1500L * 1000 * 1000 // 1.5B matches
-  // (session, dir, spectrum-at-build, pair table, OWNED bucket checkpoint):
-  // the spectrum rides along so a warm hit can re-apply the caller's bound,
-  // and the bucket checkpoint rides along because the persisted pair
-  // table's recompute lineage runs through it — it must stay alive (and
-  // OUT of the query-scoped registry that Bench/Verify sweep between
-  // queries) for as long as the slot is warm (advice r17, medium)
-  private var pairCache: Option[(org.apache.spark.sql.SparkSession, String,
-    Long, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] =
-    None
-  // (session, dir) -> distinct active users, memoized by the same build:
-  // q199's threshold table is ≤ one row per user BY CONSTRUCTION, so this
-  // scalar is the provable size bound its broadcast decision needs
-  private var userCountCache: Option[(org.apache.spark.sql.SparkSession,
-    String, Long)] = None
-  graft.queries.TextOps.onRelease(() => releaseStagedCooccur())
-  private[graft] def releaseStagedCooccur(): Unit = synchronized {
-    pairCache.foreach { p =>
-      // order matters: the cached pair table dies FIRST (after this no
-      // plan can demand a recompute through the bucket lineage), then the
-      // owned bucket checkpoint's blocks release at block level
-      p._4.unpersist(blocking = false)
-      graft.Checkpoints.release(p._5)
-    }
-    pairCache = None
-    userCountCache = None
-  }
 
-  /** Distinct users active in any (event_type, hour) bucket — computed on
-    * the bucket table the pair build already checkpoints (one narrow agg),
-    * memoized per (session, dir). */
+  /** What one co-occurrence build measured: the exact spectrum (so a warm
+    * hit can re-apply each caller's bound), the distinct active users
+    * (q199's threshold table is ≤ one row per user BY CONSTRUCTION, so
+    * this scalar is the provable size bound its broadcast decision needs)
+    * and, under the gate, the persisted pair table with the OWNED bucket
+    * checkpoint its recompute lineage runs through — that checkpoint must
+    * stay alive (and OUT of the query-scoped registry Bench/Verify sweep
+    * between queries) for as long as the slot is warm (advice r17,
+    * medium). */
+  private final case class Cooccur(spectrum: Long, users: Long,
+      staged: Option[(org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)])
+
+  /** Distinct users active in any (event_type, hour) bucket — a by-product
+    * of the pair build (one narrow agg on its bucket table). */
   private[graft] def cooccurUserCount(s: org.apache.spark.sql.SparkSession,
-      d: String): Long = synchronized {
-    userCountCache match {
-      case Some((sess, dir, n)) if (sess eq s) && dir == d => n
-      case _ =>
-        sys.error("cooccurUserCount before cooccurPairCounts: the count is " +
-          "a by-product of the pair build; call cooccurPairCounts first")
-    }
-  }
+      d: String): Long = cooccurSlot(s, d, StagedPairSpectrumBound, _ => ()).users
 
   /** Match-stream → (u1, u2) → shared_buckets aggregation, its shuffle
     * width derived from the gate's EXACT spectrum scalar. At the fixed
@@ -1082,63 +1061,66 @@ object Events {
 
   private[graft] def cooccurPairCounts(s: org.apache.spark.sql.SparkSession,
       d: String,
-      bound: Long = StagedPairSpectrumBound): org.apache.spark.sql.DataFrame =
-    synchronized {
-      def streamedEnum(spectrum: Long): org.apache.spark.sql.DataFrame = {
-        // query-scoped lifecycle: the bucket checkpoint is consumed within
-        // the calling query and swept by releaseScoped between queries
+      bound: Long = StagedPairSpectrumBound): org.apache.spark.sql.DataFrame = {
+    var streamed: Option[org.apache.spark.sql.DataFrame] = None
+    val c = cooccurSlot(s, d, bound, pc => streamed = Some(pc))
+    c.staged match {
+      case Some((pairs, _)) if c.spectrum <= bound => pairs
+      case _ => streamed.getOrElse {
+        // warm slot, but the SPECTRUM EXCEEDS THIS CALLER'S BOUND: the
+        // gate applies per call, not only on a cold slot (advice r17) —
+        // serve a fresh streamed enumeration (width-scaled by the slot's
+        // measured spectrum) and leave the slot warm for the callers it
+        // admits. Query-scoped lifecycle: this bucket checkpoint is
+        // consumed within the calling query and swept by releaseScoped.
         val bucketed = cooccurBuckets(s, d)
         graft.Checkpoints.registerScoped(bucketed)
-        pairCountsOver(s, bucketed, spectrum)
+        pairCountsOver(s, bucketed, c.spectrum)
       }
-      pairCache match {
-        case Some((sess, dir, spectrum, df, _))
-            if (sess eq s) && dir == d && spectrum <= bound => df
-        case Some((sess, dir, spectrum, _, _)) if (sess eq s) && dir == d =>
-          // warm slot, but the SPECTRUM EXCEEDS THIS CALLER'S BOUND: the
-          // gate applies per call, not only on a cold slot (advice r17) —
-          // serve a fresh streamed enumeration (width-scaled by the slot's
-          // measured spectrum) and leave the slot (staged under its own
-          // bound decision) warm for the callers it admits
-          streamedEnum(spectrum)
-        case prev =>
-          prev.foreach { p =>
-            p._4.unpersist(blocking = false)
-            graft.Checkpoints.release(p._5)
-          }
-          // slot cleared BEFORE the build: a failed build must leave None
-          // (next consumer rebuilds), never a stale entry (review r15)
-          pairCache = None
-          val bucketed = cooccurBuckets(s, d)
-          val spectrum = bucketed
-            .groupBy(col("event_type"), col("h"))
-            .agg(count(lit(1)).as("c"))
-            .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
-            .head().getLong(0)
-          val pc = pairCountsOver(s, bucketed, spectrum)
-          userCountCache = Some((s, d, bucketed
-            .agg(count_distinct(col("user_id"))).head().getLong(0)))
-          if (spectrum > bound) {
-            // stream, don't stage — and hand the bucket checkpoint to the
-            // between-queries sweep, since no slot will own it
-            graft.Checkpoints.registerScoped(bucketed)
-            pc
-          } else graft.queries.TextOps.timedBuild("cooccur_pairs_build") {
-            // CROSS-QUERY staged slot: persist() keeps the measured 30×
-            // memory profile (compressed columnar; a localCheckpoint of
-            // the same 700M-row table stores raw row blocks and OOMed the
-            // 8g probe heap where persist completes). The lineage hazard
-            // (advice r17, medium) is severed on the OTHER side: the
-            // bucket checkpoint stays PLAIN — never in the query-scoped
-            // registry Bench/Verify sweep between queries — and is owned
-            // by this slot (released in releaseStagedCooccur, after the
-            // cache), so a cached-partition loss recomputes through LIVE
-            // checkpoint blocks instead of failing unrecoverably.
-            val cached = pc.persist()
-            cached.count() // eager: concurrent AQE stages would race a cold cache
-            pairCache = Some((s, d, spectrum, cached, bucketed))
-            cached
-          }
+    }
+  }
+
+  /** The staged build behind [[cooccurPairCounts]]. A gated-off entry
+    * (nothing staged) is reused only by callers whose bound also excludes
+    * its spectrum; a caller whose bound admits it rebuilds and stages.
+    * `onStream` receives the streamed enumeration a gated-off build ran. */
+  private def cooccurSlot(s: org.apache.spark.sql.SparkSession, d: String,
+      bound: Long, onStream: org.apache.spark.sql.DataFrame => Unit): Cooccur =
+    graft.Staged.slot[Cooccur]("cooccur_pairs_build", s, d,
+      free = _.staged.foreach { case (pairs, bucketed) =>
+        // order matters: the cached pair table dies FIRST (after this no
+        // plan can demand a recompute through the bucket lineage), then
+        // the owned bucket checkpoint's blocks release at block level
+        pairs.unpersist(blocking = false)
+        graft.Checkpoints.release(bucketed)
+      },
+      reuse = c => c.staged.isDefined || c.spectrum > bound) {
+      val bucketed = cooccurBuckets(s, d)
+      val spectrum = bucketed
+        .groupBy(col("event_type"), col("h"))
+        .agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
+        .head().getLong(0)
+      val pc = pairCountsOver(s, bucketed, spectrum)
+      val users = bucketed.agg(count_distinct(col("user_id"))).head().getLong(0)
+      if (spectrum > bound) {
+        // stream, don't stage — and hand the bucket checkpoint to the
+        // between-queries sweep, since no slot will own it
+        graft.Checkpoints.registerScoped(bucketed)
+        onStream(pc)
+        Cooccur(spectrum, users, None)
+      } else {
+        // CROSS-QUERY staged slot: persist() keeps the measured 30×
+        // memory profile (compressed columnar; a localCheckpoint of the
+        // same 700M-row table stores raw row blocks and OOMed the 8g probe
+        // heap where persist completes). The lineage hazard (advice r17,
+        // medium) is severed on the OTHER side: the bucket checkpoint
+        // stays PLAIN and is owned by this slot, so a cached-partition
+        // loss recomputes through LIVE checkpoint blocks instead of
+        // failing unrecoverably.
+        val cached = pc.persist()
+        cached.count() // eager: concurrent AQE stages would race a cold cache
+        Cooccur(spectrum, users, Some((cached, bucketed)))
       }
     }
 

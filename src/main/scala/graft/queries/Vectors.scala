@@ -162,51 +162,15 @@ object Vectors {
 
   // r18 (guide §2.4): the exact and IVF top-k tables are shared
   // intermediates — q39/q111 serve them and the q134 recall harness reads
-  // BOTH — so each is staged once per (session, dir) and every consumer
-  // reads the materialized 50-row table instead of re-running its corpus
-  // scan (the jaccard-pairs/basket-pairs pattern: in a real pipeline the
-  // ANN result table is written once and the recall audit joins it).
-  // Stage-timed so Bench attributes the build to its own row; released
-  // with the other staged tables via the TextOps lifecycle.
-  private var exactTopCache: Option[(SparkSession, String, DataFrame)] = None
-  private var ivfTopCache: Option[(SparkSession, String, DataFrame)] = None
-  graft.queries.TextOps.onRelease(() => releaseStagedTopK())
-  private[graft] def releaseStagedTopK(): Unit = synchronized {
-    exactTopCache.foreach(_._3.unpersist(blocking = false))
-    exactTopCache = None
-    ivfTopCache.foreach(_._3.unpersist(blocking = false))
-    ivfTopCache = None
-  }
-
+  // BOTH — so each is staged once and every consumer reads the
+  // materialized 50-row table instead of re-running its corpus scan (the
+  // jaccard-pairs/basket-pairs pattern: in a real pipeline the ANN result
+  // table is written once and the recall audit joins it).
   private def exactTopK(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      exactTopCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => graft.queries.TextOps.timedBuild("exact_topk_build") {
-          prev.foreach(_._3.unpersist(blocking = false))
-          exactTopCache = None // failed build must leave None, not stale
-          val t = exactTopKPlan(s, d).persist()
-          t.count() // eager: concurrent AQE stages would race a cold cache
-          exactTopCache = Some((s, d, t))
-          t
-        }
-      }
-    }
+    graft.Staged.persisted("exact_topk_build", s, d)(exactTopKPlan(s, d))
 
   private def ivfTopK(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      ivfTopCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => graft.queries.TextOps.timedBuild("ivf_topk_build") {
-          prev.foreach(_._3.unpersist(blocking = false))
-          ivfTopCache = None
-          val t = ivfTopKPlan(s, d).persist()
-          t.count()
-          ivfTopCache = Some((s, d, t))
-          t
-        }
-      }
-    }
+    graft.Staged.persisted("ivf_topk_build", s, d)(ivfTopKPlan(s, d))
 
   /** Exact brute-force top-5 (q39's law), shared with the q134 recall
     * harness: first-10-ids query batch, every corpus vector scored with the

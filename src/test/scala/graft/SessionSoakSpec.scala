@@ -13,7 +13,7 @@ package graft
   * directly or a release path was dropped.
   *
   * Contract enforced here, over the checkpoint-using query family run with
-  * Bench's exact release discipline (releaseShingles + releaseScoped at
+  * Bench's exact release discipline (Staged.releaseAll + releaseScoped at
   * pass boundaries):
   *   1. after each pass's release sweep, zero scoped checkpoints remain
   *      registered, and
@@ -30,19 +30,24 @@ class SessionSoakSpec extends SparkSpec {
 
   // The localCheckpoint-using family: q35/q36 (candidate-pair scoped
   // checkpoint), q81 (label-propagation rounds + staged label table),
-  // q61/q96/q103/q108 (totalRank frozen-pid scratch, salt-width probe),
-  // q106/q107 (staged per-doc window cache) so every entry in
-  // TextOps.releaseShingles' registry is exercised by the contract,
-  // plus q112 (cross-set candidate scoped checkpoint over the shared
-  // shingle-array cache) and q137 (groupedPrefixSum's frozen-pid scratch).
+  // q61/q96/q103/q108 (totalRank frozen-pid scratch, salt-width probe,
+  // staged co-occurrence pairs), q106/q107 (staged per-doc window tables),
+  // q112 (cross-set candidate scoped checkpoint over the shared
+  // shingle-array slot) and q137 (groupedPrefixSum's frozen-pid scratch);
+  // plus one consumer of every other Staged slot, so each slot the
+  // registry can hold is exercised by the contract: q113 (bigram model,
+  // familiarity scored), q177 (bm25, dense top-20), q173 (basket pairs),
+  // q134 (exact and IVF top-k), q42 (tumbling drain), q122 (aHash classes).
   private val soak = Seq(
     "q35_jaccard_pairs", "q36_minhash_lsh", "q81_dedup_clusters",
     "q61_ntile_deciles", "q96_salted_cooccur", "q103_skew_profile",
     "q106_window_dedup", "q107_source_overlap", "q108_sequence_packing",
-    "q112_fuzzy_decontam", "q137_budget_sample")
+    "q112_fuzzy_decontam", "q137_budget_sample", "q113_bigram_lm",
+    "q177_hybrid_rrf", "q173_basket_pairs", "q134_ann_recall",
+    "q42_stream_tumbling", "q122_image_ahash_neardup")
 
   private def flush(): Unit = {
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
     Checkpoints.releaseScoped()
   }
 
@@ -53,7 +58,12 @@ class SessionSoakSpec extends SparkSpec {
     var baseline = spark.sparkContext.getPersistentRDDs.size
     (1 to 3).foreach { pass =>
       soak.foreach(n => reg(n)(spark, sf).count())
+      // every slot is live before the sweep: the soak covers all 17
+      assert(Staged.live.size == 17,
+        s"pass $pass: soak reached ${Staged.live.size} of 17 slots: ${Staged.live}")
       flush()
+      assert(Staged.live.isEmpty,
+        s"pass $pass: staged slots survived releaseAll(): ${Staged.live}")
       assert(Checkpoints.scopedCount == 0,
         s"pass $pass: ${Checkpoints.scopedCount} scoped checkpoints survived releaseScoped()")
       val now = spark.sparkContext.getPersistentRDDs.size
